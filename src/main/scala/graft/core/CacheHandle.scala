@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftbridge.CheckpointBridge
 
 /** Release handle for persisted frames created INSIDE lazy operators.
   *
@@ -12,7 +13,9 @@ import org.apache.spark.sql.DataFrame
   * it cannot unpersist before the caller materializes — and without a
   * hook, library/notebook callers accumulate cached frames for the
   * session lifetime (`clearCache()` is a sledgehammer that also evicts
-  * the caller's own caches).
+  * the caller's own caches). [[graft.operators.MergeUpsert.urlConflictFilterBloom]]
+  * likewise `localCheckpoint()`s its staged batch, which `clearCache()`
+  * cannot free at all.
   *
   * Pattern: the caller passes a handle, materializes the operator's
   * output, then releases —
@@ -29,19 +32,31 @@ import org.apache.spark.sql.DataFrame
   * clears the cache between queries).
   */
 final class CacheHandle private (tracking: Boolean) {
-  private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  private val releases =
+    scala.collection.mutable.ArrayBuffer.empty[Boolean => Unit]
+
+  private def register(df: DataFrame)(free: Boolean => Unit): DataFrame =
+    if (!tracking) df else synchronized { releases += free; df }
 
   /** Record a frame the operator persisted; returns it unchanged. */
   private[graft] def track(df: DataFrame): DataFrame =
-    if (!tracking) df else synchronized { frames += df; df }
+    register(df)(df.unpersist(_))
 
-  /** Unpersist every tracked frame (idempotent). Call only after the
-    * operator's output has been materialized — released blocks are
-    * recomputed from source if a plan reads them again.
+  /** Record a frame the operator `localCheckpoint()`ed; returns it
+    * unchanged. Its blocks are RDD persistence, which `unpersist()` on
+    * the frame does not reach.
+    */
+  private[graft] def trackCheckpoint(df: DataFrame): DataFrame =
+    register(df)(CheckpointBridge.release(df, _))
+
+  /** Free every tracked frame (idempotent). Call only after the
+    * operator's output has been materialized — released cache blocks
+    * are recomputed from source if a plan reads them again, and a
+    * released checkpoint cannot be read at all.
     */
   def release(blocking: Boolean = false): Unit = synchronized {
-    frames.foreach(_.unpersist(blocking))
-    frames.clear()
+    releases.foreach(_(blocking))
+    releases.clear()
   }
 }
 

@@ -4,8 +4,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Codegen'd membership probe against a BROADCAST Bloom filter —
@@ -15,47 +14,17 @@ import org.apache.spark.util.sketch.BloomFilter
   * superset of the rows any subsequent exact join needs).
   *
   * The filter ships once per executor via the broadcast (a reference
-  * object in the generated code), not per task; the probe hashes the
-  * string's UTF-8 bytes directly (`mightContainBinary`), which is
-  * bit-compatible with `putString`'s insertion path, so filters built
-  * by `DataFrame.stat.bloomFilter` probe correctly.
-  */
-case class BloomMightContainExpr(child: Expression,
-    bloom: Broadcast[BloomFilter]) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bloom_might_contain requires STRING input, got ${child.dataType}")
-
-  override def dataType: DataType = BooleanType
-
-  override def nullSafeEval(v: Any): Any =
-    bloom.value.mightContainBinary(v.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val ref = ctx.addReferenceObj("bloomBc", bloom,
-      classOf[Broadcast[BloomFilter]].getName)
-    defineCodeGen(ctx, ev, c =>
-      s"((org.apache.spark.util.sketch.BloomFilter)$ref.value())" +
-        s".mightContainBinary($c.getBytes())")
-  }
-
-  override protected def withNewChildInternal(c: Expression)
-      : BloomMightContainExpr = copy(child = c)
-}
-
-/** LONG-key sibling of [[BloomMightContainExpr]]: probes with
+  * object in the generated code), not per task. The probe is
   * `mightContainLong`, bit-compatible with `putLong` — the insertion
-  * path `DataFrame.stat.bloomFilter` uses for integral columns.
+  * path of `DataFrame.stat.bloomFilter` for integral columns and of
+  * Spark's `BloomFilterAggregate`. String keys are probed by their
+  * `xxhash64`.
   */
 case class BloomMightContainLongExpr(child: Expression,
     bloom: Broadcast[BloomFilter]) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.LongType)
-      TypeCheckResult.TypeCheckSuccess
+    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"bloom_might_contain_long requires BIGINT input, got ${child.dataType}")
 

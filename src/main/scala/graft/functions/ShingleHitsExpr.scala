@@ -25,7 +25,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * zero rows. Bloom false positives (never negatives) make the output
   * a superset of the true hits — callers MUST re-join the emitted
   * shingles against the exact benchmark set, which restores exactness
-  * (the same contract as [[BloomMightContainExpr]] join pruning).
+  * (the same contract as [[BloomMightContainLongExpr]] join pruning).
   *
   * Tokenization parity with [[graft.operators.Dedupe.shingleRowsAll]]
   * and [[MinHashSigExpr]]: words split on single 0x20 bytes keeping

@@ -70,20 +70,16 @@ object Inat {
       StructField("name", StringType),
       StructField("active", BooleanType))))
 
-  /** License code → (license, version) dim
+  /** License code → (license, version)
     * (`inaturalist/create_schema.sql` license_codes seed; iNat exposes
     * the standard CC 4.0 suite plus CC0/PDM).
     */
-  def licenseCodes(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("CC0", "cc0", "1.0"), ("CC-BY", "by", "4.0"),
-      ("CC-BY-NC", "by-nc", "4.0"), ("CC-BY-ND", "by-nd", "4.0"),
-      ("CC-BY-SA", "by-sa", "4.0"), ("CC-BY-NC-ND", "by-nc-nd", "4.0"),
-      ("CC-BY-NC-SA", "by-nc-sa", "4.0"), ("PD", "pdm", "1.0"),
-      ("GFDL", "gfdl", "1.3"))
-      .toDF("inat_code", "cc_license", "license_version")
-  }
+  val licenseCodes: Map[String, (String, String)] = Map(
+    "CC0" -> ("cc0", "1.0"), "CC-BY" -> ("by", "4.0"),
+    "CC-BY-NC" -> ("by-nc", "4.0"), "CC-BY-ND" -> ("by-nd", "4.0"),
+    "CC-BY-SA" -> ("by-sa", "4.0"), "CC-BY-NC-ND" -> ("by-nc-nd", "4.0"),
+    "CC-BY-NC-SA" -> ("by-nc-sa", "4.0"), "PD" -> ("pdm", "1.0"),
+    "GFDL" -> ("gfdl", "1.3"))
 
   /** A8 — photo ids appearing more than once (photos.sql:41-48). */
   def photoDupes(photos: DataFrame): DataFrame =
@@ -94,41 +90,64 @@ object Inat {
     * the slash-separated ancestry into ids, hash-join back to taxa,
     * collect ancestor names (root-first by path position), cap at 20
     * (taxa.sql:222-256 without the Catalog-of-Life vernacular sources).
+    *
+    * One row per taxa row. The per-taxon aggregation also carries each
+    * taxa row's own columns (tagged with a row id, so identical rows
+    * stay separate), which replaces a second join of its result back
+    * to taxa. Rows that share a taxon_id share one tag list, gathered
+    * from all their ancestries; a null taxon_id gets no tags; an
+    * ancestor id missing from taxa is skipped.
     */
   def taxaEnriched(taxa: DataFrame): DataFrame = {
-    val anc = taxa
-      .select(col("taxon_id"),
-        posexplode(split(col("ancestry"), "/")).as(Seq("pos", "anc_id")))
+    val names = taxa.select(col("taxon_id").as("anc_id"),
+      col("name").as("anc_name"), lit(true).as("__hit"))
+    val ancestor = when(col("__hit") && col("taxon_id").isNotNull,
+      struct(col("pos"), col("anc_name")))
+    // the row id is assigned before the explode multiplies the row
+    taxa
+      .withColumn("__row", struct(monotonically_increasing_id().as("row"),
+        col("name").as("title"), col("rank")))
+      .select(col("taxon_id"), col("__row"),
+        posexplode_outer(split(col("ancestry"), "/")).as(Seq("pos", "anc_id")))
       .withColumn("anc_id", col("anc_id").cast("int"))
-      .join(taxa.select(col("taxon_id").as("anc_id"),
-        col("name").as("anc_name")), Seq("anc_id"))
+      .join(names, Seq("anc_id"), "left")
       .groupBy("taxon_id")
-      .agg(slice(array_sort(collect_list(struct(col("pos"), col("anc_name"))))
-        .getField("anc_name"), 1, 20).as("ancestor_tags"))
-    taxa.select(col("taxon_id"), col("name").as("title"), col("rank"))
-      .join(anc, Seq("taxon_id"), "left")
-      .withColumn("ancestor_tags",
-        coalesce(col("ancestor_tags"), array().cast("array<string>")))
+      .agg(collect_set(col("__row")).as("__rows"),
+        slice(array_sort(collect_list(ancestor)).getField("anc_name"), 1, 20)
+          .as("ancestor_tags"))
+      .select(col("taxon_id"), explode(col("__rows")).as("__row"),
+        col("ancestor_tags"))
+      .select(col("taxon_id"), col("__row.title").as("title"),
+        col("__row.rank").as("rank"), col("ancestor_tags"))
   }
 
   /** The transformed-table star join (transformed_table.template.sql:
-    * 17-77): photos ⋈ observations ⋈ observers ⋈ enriched taxa ⋈
-    * license codes, minus duplicate photo_ids, plus URL/creator
+    * 17-77): photos ⋈ observations ⋈ observers ⋈ enriched taxa, minus
+    * duplicate photo_ids and unknown license codes, plus URL/creator
     * synthesis (P25) — emitting catalog-shaped records.
+    *
+    * Duplicate photo_ids are dropped by one window count over photos
+    * (the [[photoDupes]] aggregate plus anti-join in a single shuffle).
+    * A null photo_id never equals a dupe id in that anti-join, so null
+    * ids are kept however often they occur. The license dim is a
+    * literal-map lookup; a code missing from it drops the row, as the
+    * inner join to the dim did. Enriched taxa are a dimension (one row
+    * per taxon) and are broadcast like the observers: left to AQE, the
+    * join's strategy, and with it the job count, depended on which
+    * side's shuffle finished first.
     */
   def transform(photos: DataFrame, observations: DataFrame,
       observers: DataFrame, taxa: DataFrame): DataFrame = {
-    val spark = photos.sparkSession
-    val dupes = photoDupes(photos)
-    val enriched = taxaEnriched(taxa)
-    val deduped = photos
-      .join(dupes, Seq("photo_id"), "left_anti")   // J2
+    val license = element_at(typedLit(licenseCodes), col("license"))
+    val deduped = photos                                 // J2
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy("photo_id")))
+      .filter(col("__n") === 1 || col("photo_id").isNull)
+      .withColumn("__license", license)
+      .filter(col("__license").isNotNull)
     deduped
       .join(observations, Seq("observation_uuid"))
       .join(broadcast(observers), Seq("observer_id"))
-      .join(enriched, Seq("taxon_id"))
-      .join(broadcast(licenseCodes(spark)),
-        col("license") === col("inat_code"))
+      .join(broadcast(taxaEnriched(taxa)), Seq("taxon_id"))
       .select(
         col("photo_id").cast("string").as("foreign_identifier"),
         concat(lit("https://www.inaturalist.org/photos/"), col("photo_id"))
@@ -139,7 +158,8 @@ object Inat {
             .otherwise(lower(col("extension")))).as("url"),
         coalesce(col("name"), col("login")).as("creator"),
         col("title"), col("ancestor_tags").as("tags"),
-        col("cc_license").as("license"), col("license_version"),
+        col("__license._1").as("license"),
+        col("__license._2").as("license_version"),
         col("width").cast("int").as("width"),
         col("height").cast("int").as("height"),
         col("quality_grade"),

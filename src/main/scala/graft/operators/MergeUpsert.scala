@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.util.sketch.BloomFilter
+
+import graft.core.CacheHandle
 
 /** The reference's upsert pipeline re-expressed as a shuffle-conscious
   * DataFrame program.
@@ -124,27 +130,61 @@ object MergeUpsert {
 
   /** J7 at catalog scale: the TARGET side of the url-conflict anti-join
     * is the 100 TB side, and shuffling all of it to reject a batch's
-    * few conflicts is the dominant cost. This variant builds a Bloom
-    * filter over the (small) staged batch's urls — one aggregation
-    * pass, runs eagerly — broadcasts it, and prefilters the target
-    * scan with a codegen'd probe BEFORE the shuffle: a target row
-    * whose url the filter rejects cannot equal any staged url, so
-    * dropping it never changes the anti-join's result (no false
-    * negatives); false positives merely survive into the exact join.
-    * Result is row-identical to [[urlConflictFilter]] — the filter
-    * prunes the shuffle, never decides membership.
+    * few conflicts is the dominant cost. This variant prefilters the
+    * target scan with a Bloom filter of the staged urls, probed by a
+    * codegen'd expression BEFORE the shuffle: a target row whose url
+    * the filter rejects cannot equal any staged url, so dropping it
+    * never changes the anti-join's result (no false negatives); false
+    * positives merely survive into the exact join. Result is
+    * row-identical to [[urlConflictFilter]] — the filter prunes the
+    * shuffle, never decides membership.
+    *
+    * The staged batch runs exactly once: ONE action materializes it as
+    * an eager `localCheckpoint` and, through an `Observation`, collects
+    * the filter in the same pass (Spark's `BloomFilterAggregate` over
+    * `xxhash64(url)`, probed with `mightContainLong`). The returned
+    * frame reads that checkpoint, so a downstream merge does not re-run
+    * the staged lineage (TSV parse, clean, window dedupe). Release the
+    * checkpoint through `caches` once the result is materialized. When
+    * no staged row has a url (BloomFilterAggregate yields NULL), no row
+    * can conflict: the batch is returned as is and the target is never
+    * scanned.
     */
   def urlConflictFilterBloom(staged: DataFrame, target: DataFrame,
       urlCol: String, fidCol: String, expectedItems: Long = 1000000L,
-      fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val bloom = staged.stat.bloomFilter(urlCol, expectedItems, fpp)
-    val bc = staged.sparkSession.sparkContext.broadcast(bloom)
-    val pruned = target.filter(ColumnBridge.column(
-      graft.functions.BloomMightContainExpr(
-        ColumnBridge.expression(col(urlCol)), bc)))
-    urlConflictFilter(staged, pruned, urlCol, fidCol)
+      fpp: Double = 0.01, caches: CacheHandle = CacheHandle.session)
+      : DataFrame = {
+    val obs = Observation()
+    val batch = caches.trackCheckpoint(staged
+      .observe(obs, urlBloom(urlCol, expectedItems, fpp).as("bloom"))
+      .localCheckpoint(true))
+    obs.get("bloom") match {
+      case null => batch
+      case bytes: Array[Byte] =>
+        val bc = staged.sparkSession.sparkContext.broadcast(
+          BloomFilter.readFrom(bytes))
+        val pruned = target.filter(ColumnBridge.column(
+          graft.functions.BloomMightContainLongExpr(
+            ColumnBridge.expression(urlHash(urlCol)), bc)))
+        urlConflictFilter(batch, pruned, urlCol, fidCol)
+    }
   }
+
+  /** The key [[urlConflictFilterBloom]]'s filter holds: `xxhash64(url)`,
+    * NULL for a NULL url (which can never conflict).
+    */
+  private[graft] def urlHash(urlCol: String): Column =
+    when(col(urlCol).isNotNull, xxhash64(col(urlCol)))
+
+  /** Serialized Bloom filter of [[urlHash]] sized for `expectedItems` at
+    * `fpp`; NULL over a frame with no non-NULL url.
+    */
+  private[graft] def urlBloom(urlCol: String, expectedItems: Long,
+      fpp: Double): Column =
+    ColumnBridge.column(new BloomFilterAggregate(
+      ColumnBridge.expression(urlHash(urlCol)), Literal(expectedItems),
+      Literal(BloomFilter.optimalNumOfBits(expectedItems, fpp)))
+      .toAggregateExpression())
 
   /** Surrogate-key assignment (columns.py:417 `identifier uuid DEFAULT
     * uuid_generate_v4()`): rows without an identifier get a fresh v4

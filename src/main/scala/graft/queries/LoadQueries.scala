@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, QueryPack, Tables}
+import graft.core.CacheHandle
 import graft.operators.{AudioSets, MergeUpsert}
 import org.apache.spark.sql.functions._
 
@@ -164,7 +165,9 @@ object LoadQueries extends QueryPack {
     * but the target side is pruned by a broadcast Bloom filter of the
     * staged urls before the anti-join shuffle — the exact-result
     * join-pruning pattern for a catalog-scale target. Hash-matching
-    * q16's oracle proves the pruned plan changes nothing.
+    * q16's oracle proves the pruned plan changes nothing. The result is
+    * checkpointed so the staged batch's checkpoint can be released
+    * before the query returns.
     */
   val q65 = Q("q65_bloom_url_conflict",
     (s, dir) => {
@@ -178,9 +181,13 @@ object LoadQueries extends QueryPack {
         concat(lit("k"), col("doc_id").cast("string")).as("fid"),
         concat(lit("https://ex.com/"), (col("doc_id") % 149).cast("string"))
           .as("url"))
-      MergeUpsert.urlConflictFilterBloom(staged, target, "url", "fid",
-          expectedItems = 100000L, fpp = 0.01)
+      val caches = CacheHandle()
+      val out = MergeUpsert.urlConflictFilterBloom(staged, target, "url",
+          "fid", expectedItems = 100000L, fpp = 0.01, caches = caches)
         .select("doc_id", "fid", "url")
+        .localCheckpoint(true)
+      caches.release()
+      out
     },
     Some("""
       WITH target AS (SELECT 'k' || doc_id AS fid,

@@ -14,11 +14,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object CheckpointBridge {
   /** Unpersist the checkpointed RDD under `df` (no-op for plans that
-    * are not checkpoint scans). Non-blocking.
+    * are not checkpoint scans). Non-blocking unless `blocking`.
     */
-  def release(df: DataFrame): Unit =
+  def release(df: DataFrame, blocking: Boolean = false): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(false)
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking)
       case _ => ()
     }
 

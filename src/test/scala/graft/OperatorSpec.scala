@@ -506,12 +506,50 @@ class OperatorSpec extends SparkSpec {
     assert(bloomed == plain && plain.nonEmpty && plain.size < 3000)
     // no false negatives: every inserted url must probe true
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val bf = staged.stat.bloomFilter(col("url"), 10000L, 0.05)
+    val bf = org.apache.spark.util.sketch.BloomFilter.readFrom(staged
+      .agg(MergeUpsert.urlBloom("url", 10000L, 0.05)).head.getAs[Array[Byte]](0))
     val bc = spark.sparkContext.broadcast(bf)
     val misses = staged.filter(!ColumnBridge.column(
-      graft.functions.BloomMightContainExpr(
-        ColumnBridge.expression(col("url")), bc))).count()
+      graft.functions.BloomMightContainLongExpr(
+        ColumnBridge.expression(MergeUpsert.urlHash("url")), bc))).count()
     assert(misses == 0)
+  }
+
+  private def urlTarget = spark.range(0, 10).select(
+    concat(lit("t"), col("id")).as("fid"),
+    concat(lit("https://ex.com/"), col("id").cast("string")).as("url"))
+
+  /** [[urlTarget]] with a scan that throws: proves a url-conflict call
+    * never read it.
+    */
+  private def unscannableTarget = {
+    val boom = udf { (u: String) =>
+      if (u != null) throw new IllegalStateException("target scanned"); u }
+    urlTarget.withColumn("url", boom(col("url")))
+  }
+
+  test("bloom url-conflict on an empty staged batch: empty, target unscanned") {
+    import graft.operators.MergeUpsert
+    val staged = spark.range(0, 3000).select(col("id").as("doc_id"),
+      concat(lit("s"), col("id")).as("fid"),
+      concat(lit("https://ex.com/"), col("id").cast("string")).as("url"))
+      .filter(lit(false))
+    val bloomed = MergeUpsert.urlConflictFilterBloom(staged, unscannableTarget,
+      "url", "fid").select("doc_id").as[Long].collect().toSeq
+    val plain = MergeUpsert.urlConflictFilter(staged, urlTarget, "url", "fid")
+      .select("doc_id").as[Long].collect().toSeq
+    assert(bloomed.isEmpty && bloomed == plain)
+  }
+
+  test("bloom url-conflict on all-null urls keeps every row, target unscanned") {
+    import graft.operators.MergeUpsert
+    val staged = spark.range(0, 300).select(col("id").as("doc_id"),
+      concat(lit("s"), col("id")).as("fid"), lit(null).cast("string").as("url"))
+    val bloomed = MergeUpsert.urlConflictFilterBloom(staged, unscannableTarget,
+      "url", "fid").select("doc_id").as[Long].collect().toSet
+    val plain = MergeUpsert.urlConflictFilter(staged, urlTarget, "url", "fid")
+      .select("doc_id").as[Long].collect().toSet
+    assert(bloomed.size == 300 && bloomed == plain)
   }
 
   test("as-of join: inclusive at equal ts, most recent wins, outer keeps misses") {
