@@ -86,9 +86,29 @@ object Bench {
       contended)
   }
 
+  /** Length bound of [[summaryLine]]: the bench driver parses it from
+    * the last ~2000 chars of output, build tool lines included.
+    */
+  val SummaryMaxChars = 1600
+
+  /** The stdout summary, printed last for the bench driver: contract
+    * fields, contended verdict, b3 rows/s, q80 split and error count
+    * (the rest goes to the summary file). `medians` are keyed `qNN`;
+    * 110 of them under 100 s fit in [[SummaryMaxChars]].
+    */
+  def summaryLine(total: Double, contended: Boolean,
+      medians: Seq[(String, Double)], b3RowsPerSec: Option[Double],
+      q80Split: String, errors: Int, sfDir: String): String = {
+    val qs = medians.map { case (k, m) => "\"" + k + f"\":$m%.2f" }
+      .mkString("{", ",", "}")
+    val b3 = b3RowsPerSec.map(r => f"$r%.0f").getOrElse("null")
+    f"""{"metric":"total","value":$total%.3f,"unit":"sec","contended":$contended,"queries":$qs,"b3_rows_per_sec":$b3,$q80Split,"errors":$errors,"sf":"$sfDir"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -117,7 +137,7 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // warm the session (FileSystem init, codegen compiler) outside timing
-    spark.read.parquet(s"$sfDir/nation.parquet").count()
+    Tables(spark, sfDir, "nation").count()
     // Three timed runs per query, MEDIAN reported — best-of-N hides
     // nothing but rewards lucky runs, and a single run is exposed to
     // GC/system noise (the r3 artifact swung individual queries 20×).
@@ -302,9 +322,9 @@ object Bench {
     // b3 runs on full suites, or on demand via the literal arg "b3"
     // (scale sweeps re-measure it at sf1/sf10 without paying the
     // whole suite at those dirs)
-    // (full-detail json, slim json for the tail-capped stdout line)
-    val b3: (String, String) = if (only.nonEmpty && !only("b3"))
-      (""""b3_inat_e2e":null""", """"b3_inat_e2e":null""") else {
+    // (full-detail json, rows/s for the tail-capped stdout line)
+    val b3: (String, Option[Double]) = if (only.nonEmpty && !only("b3"))
+      (""""b3_inat_e2e":null""", None) else {
       import graft.inat.Inat
       import graft.operators.MergeUpsert
       val li = Tables(spark, sfDir, "lineitem")
@@ -377,20 +397,13 @@ object Bench {
       val sec = medianOf(times)
       val head = f""""b3_inat_e2e":{"rows":$photoRows,"sec":$sec%.3f,"rows_per_sec":${photoRows / sec}%.0f,"baseline_rows_per_sec":1852"""
       (head + f""","runs":${times.map(t => f"${t._1}%.3f").mkString("[", ",", "]")},"gc_ms":${times.map(_._2).mkString("[", ",", "]")}}""",
-        head + "}")
+        Some(photoRows / sec))
     }
-    // Output design is load-bearing: the driver captures only the LAST
-    // ~2000 chars of stdout (with sbt's "[success]" line at the very
-    // end), so (a) the summary must be printed LAST — BENCH_r08 lost it
-    // by printing it first — and (b) the summary must be COMPACT enough
-    // to fit whole in that window. Query keys are therefore shortened to
-    // their qNN prefix in machine lines (the full names are printed in
-    // early human-readable lines and are 1:1 with SparkEntry.queries).
+    // Machine lines key queries by their qNN prefix (see summaryLine);
+    // the full names, 1:1 with SparkEntry.queries, are printed early.
     // Per-run detail (sec/gc_ms/loadavg; a 4th entry = the contention
-    // guard re-ran the query) is emitted ONLY for anomalous queries —
-    // on a quiet run the detail line is tiny and the whole adjudication
-    // record survives tail capture; on a noisy run it grows to exactly
-    // the evidence the judge needs.
+    // guard re-ran the query) is emitted ONLY for anomalous queries, so
+    // a quiet run's stdout tail stays small.
     def short(name: String): String = name.takeWhile(_ != '_')
     // human-readable full-name medians, early (expendable under truncation)
     results.grouped(10).foreach { g =>
@@ -681,20 +694,6 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"bench detail write failed: $e")
     }
-    // The one-line stdout summary is the driver's PRIMARY artifact and
-    // its capture window holds only the LAST ~2000 chars of output
-    // (~1880 after the trailing sbt lines) — the r17 line, carrying the
-    // full calibration block with 12 probes, grew to ~1920 chars and
-    // lost its HEAD to the window, so the driver parsed nothing and
-    // PERF_r17 came back empty (r17 judge directive #2). The line now
-    // stays compact: full-name medians, per-run arrays, probes, b3
-    // run arrays all live in the detail file; the stdout line keeps the
-    // contract fields (metric/value/unit/queries/sf), the contended
-    // stamp with a 3-number cal digest, and the midrun evidence. The
-    // SAME full summary (calibration included) is also written to a
-    // file the driver or judge can read when stdout is clipped anyway.
-    val calDigest = f""""cal":{"median_drift":$medianDrift%.2f,"max_drift":$maxDrift%.2f,"steal_pct":$suiteStealPct%.1f,"burst":${cal.burst}}"""
-    val summaryLine = f"""{"metric":"total","value":$total%.3f,"unit":"sec","contended":$contended,$calDigest,$midrunJson,"queries":$qs,${b3._2},$q80Split,"errors":$errs,"sf":"$sfDir"}"""
     val summaryFull = f"""{"metric":"total","value":$total%.3f,"unit":"sec","cpus":$cpus,"contended":$contended,$midrunJson,$calJson,${b3._1},$q80Split,"queries":$qs,"errors":$errs,"sf":"$sfDir"}"""
     val summaryPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_SUMMARY",
       if (commitDetail) "BENCH_SUMMARY.json" else "BENCH_SUMMARY.scratch.json")
@@ -705,7 +704,9 @@ object Bench {
     } catch { case e: Throwable =>
       System.err.println(s"bench summary write failed: $e")
     }
-    println(summaryLine)
+    println(summaryLine(total, contended,
+      results.map { case (k, ts) => short(k) -> medianOf(ts) }, b3._2,
+      q80Split, errors.size, sfDir))
     if (errors.nonEmpty) { spark.stop(); sys.exit(1) }
     spark.stop()
   }

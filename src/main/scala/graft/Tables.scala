@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated synthetic tables (TESTDATA.md).
   *
-  * Scale notes: each table is a single parquet file locally, but every
-  * reader goes through `spark.read.parquet` so that on a real cluster the
-  * same path can be a partitioned directory; Catalyst handles column
-  * pruning + predicate pushdown into the scan (verify with
+  * Each table is `<dir>/<name>.parquet`, one file as generated or a
+  * directory of part files (`graft.tools.ScaleUp`), read by
+  * [[ParquetSchemaBridge.read]]: the schema comes from one footer on the
+  * driver, so opening a table runs no Spark job. Catalyst handles
+  * column pruning + predicate pushdown into the scan (verify with
   * `.explain("formatted")` → `PushedFilters`/`ReadSchema`).
   */
 object Tables {
@@ -18,7 +20,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetSchemaBridge.read(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEventTs(df) else df
   }
 

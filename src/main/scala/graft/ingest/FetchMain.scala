@@ -4,6 +4,7 @@ import java.nio.file.{Path, Paths}
 import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 
 /** The runnable provider pull: plan → fetch → land → extract, end to
   * end. This is the binary the reference runs as its `pull_data` task
@@ -100,8 +101,8 @@ object FetchMain {
       val recs = extract(spark, landingDir)
       val parquetDir = outDir.resolve("records").toString
       recs.write.mode("overwrite").parquet(parquetDir)
-      println(s"EXTRACTED ${spark.read.parquet(parquetDir).count()} " +
-        s"records -> $parquetDir")
+      val n = ParquetSchemaBridge.read(spark, parquetDir).count()
+      println(s"EXTRACTED $n records -> $parquetDir")
       // a slice that failed every retry is an aggregate error AFTER the
       // commit, exactly like the reference's ingestion_errors re-raise
       if (skipped.nonEmpty)

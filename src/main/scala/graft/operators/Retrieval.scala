@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 
 /** Sparse lexical retrieval over the documents table: BM25 top-k — the
   * keyword half of corpus curation (targeted quality retrieval,
@@ -175,8 +176,8 @@ object Retrieval {
   def topKIndexed(spark: SparkSession, indexPath: String,
       queryTerms: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75)
       : DataFrame = {
-    val doclens = spark.read.parquet(s"$indexPath/doclens")
-    val qtf = spark.read.parquet(s"$indexPath/postings")
+    val doclens = ParquetSchemaBridge.read(spark, s"$indexPath/doclens")
+    val qtf = ParquetSchemaBridge.read(spark, s"$indexPath/postings")
       .join(broadcast(queryTerms.select("term").distinct()), "term")
       .join(doclens, "doc_id")
     val stats = doclens.agg(count(lit(1)).as("n"),

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -463,7 +464,7 @@ object Similarity {
     */
   def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame =
-    spark.read.parquet(currentIvfRoot(spark, path))
+    ParquetSchemaBridge.read(spark, currentIvfRoot(spark, path))
 
   /** Compact an IVF index's cell partitions: each touched cell (by
     * default every cell holding more than one data file — the residue
@@ -534,7 +535,7 @@ object Similarity {
         // filter is a partition-column predicate, so only fragmented
         // directories are ever read — cost still scales with the
         // fragmented fraction, not the index.
-        val frag = spark.read.parquet(dataRoot.toString)
+        val frag = ParquetSchemaBridge.read(spark, dataRoot.toString)
           .filter(col("cell_id").cast("string").isin(fragNames: _*))
         // rows per cell -> packed file count per cell (cells are a plan
         // parameter, ~sqrt(n); collecting one count per fragmented cell

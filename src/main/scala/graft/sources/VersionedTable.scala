@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 
 import graft.operators.MergeUpsert
 
@@ -66,14 +67,7 @@ object VersionedTable {
       asOfVersion: Option[Long] = None): DataFrame = {
     val v = asOfVersion.orElse(currentVersion(spark, root)).getOrElse(
       throw new IllegalStateException(s"no committed version at $root"))
-    // explicit footer schema: skips the per-read schema-inference job
-    // (see SegmentedTable.readParquet)
-    org.apache.spark.sql.graftbridge.ParquetSchemaBridge
-      .dirSchema(spark, versionDir(root, v)) match {
-      case Some(s) =>
-        spark.read.schema(s).parquet(versionDir(root, v).toString)
-      case None => spark.read.parquet(versionDir(root, v).toString)
-    }
+    ParquetSchemaBridge.read(spark, versionDir(root, v).toString)
   }
 
   /** Highest version directory present (committed or orphaned). */

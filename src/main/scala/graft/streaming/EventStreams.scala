@@ -1,7 +1,9 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ParquetSchemaBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
@@ -32,7 +34,8 @@ object EventStreams {
     *
     * If the landing dir exists but holds no files yet, fall back to the
     * canonical declared schema (`ts` as TIMESTAMP_NTZ — what the current
-    * generator writes) instead of failing stream construction.
+    * generator writes) instead of failing stream construction. A
+    * missing landing dir fails with PATH_NOT_FOUND.
     *
     * Limitation (inherent to file-source streams): the schema is pinned
     * once at start. If files with a DIFFERENT ts encoding arrive
@@ -42,13 +45,8 @@ object EventStreams {
     * restart is the natural boundary anyway.
     */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema =
-      try spark.read.parquet(dir).schema
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-          eventSchema
-      }
+    val fileSchema = ParquetSchemaBridge
+      .schemaOf(spark, new Path(dir)).getOrElse(eventSchema)
     graft.Tables.normalizeEventTs(
       spark.readStream.schema(fileSchema).parquet(dir))
   }

@@ -1,62 +1,76 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFooterReader, ParquetToSparkSchemaConverter}
+  ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
-/** Read a parquet file's Spark schema from its footer ON THE DRIVER —
-  * no Spark job. `spark.read.parquet(...)` without an explicit schema
-  * runs schema inference through `mergeSchemasInParallel`, which is a
-  * scheduled 1-task Spark job per read call even for a single tiny
-  * file; a store-backed operator that opens its segment tables a
-  * dozen times per invocation (q80's nightly loop: ~17 such jobs of
-  * 20-200 ms each, measured by JobProfile r18) pays a scheduling
-  * floor that has nothing to do with data. The footer is a few KB of
-  * driver-side filesystem I/O instead.
+/** The engine's one batch parquet reader. `spark.read.parquet(...)`
+  * without a schema infers it through `mergeSchemasInParallel`: a
+  * scheduled 1-task Spark job per read call, even for one tiny file
+  * (15 of the 47 jobs of one pass over an 11-query mix of the synthetic
+  * tables; ~17 per q80 nightly loop over the store segments). [[read]]
+  * reads the schema from one data file's footer on the driver instead.
   *
-  * Lives under org.apache.spark.sql.* for `private[sql]` access to
+  * Parity with inference: without `mergeSchema`, inference also reads
+  * one file's footer through `readSchemaFromFooter` (the schema a Spark
+  * writer stored, else the parquet schema converted under the session's
+  * flags, nanos-as-long included), and the reader makes data columns
+  * nullable and discovers `k=v` partition columns the same way either
+  * way. Lives under org.apache.spark.sql.* for `private[sql]` access to
   * ParquetToSparkSchemaConverter (same pattern as [[ColumnBridge]]).
-  * The conversion honors the session's parquet flags (binary-as-
-  * string, int96 timestamps, the nanos-as-long legacy flag this
-  * engine sets globally) by building the converter from the session
-  * state's Hadoop conf — the exact converter inference would use.
   */
 object ParquetSchemaBridge {
 
-  /** Spark schema of `file` (a parquet data file), from its footer. */
-  def footerSchema(spark: SparkSession, file: Path): StructType = {
+  /** `spark.read.parquet(paths: _*)` with the footer schema of the first
+    * data file under `paths` (one table's files share a schema by
+    * construction); plain inference when no path holds a data file.
+    */
+  def read(spark: SparkSession, paths: String*): DataFrame =
+    paths.view.flatMap(p => schemaOf(spark, new Path(p))).headOption match {
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** Footer schema (without partition columns) of `path` if it is a
+    * file, else of the first non-hidden, non-empty `.parquet` file in
+    * the directory or in its `k=v` partition directories. None when
+    * `path` does not exist or holds no data file.
+    */
+  def schemaOf(spark: SparkSession, path: Path): Option[StructType] = {
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val footer = ParquetFooterReader.readFooter(
-      org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(file, hadoopConf),
-      org.apache.parquet.format.converter.ParquetMetadataConverter
-        .SKIP_ROW_GROUPS)
-    val sqlConf = spark.sessionState.conf
-    new ParquetToSparkSchemaConverter(
-      assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
-      assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
-      caseSensitive = sqlConf.caseSensitiveAnalysis,
-      inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
-      nanosAsLong = sqlConf.legacyParquetNanosAsLong)
-      .convert(footer.getFileMetaData.getSchema)
+    val fs = path.getFileSystem(hadoopConf)
+    if (!fs.exists(path)) None
+    else firstDataFile(fs, path).map { file =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(file, hadoopConf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val sqlConf = spark.sessionState.conf
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+        new ParquetToSparkSchemaConverter(
+          assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
+          assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
+          caseSensitive = sqlConf.caseSensitiveAnalysis,
+          inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
+          nanosAsLong = sqlConf.legacyParquetNanosAsLong))
+    }
   }
 
-  /** Schema of the first parquet data file under `dir` (all files of
-    * one committed segment/snapshot share a schema by construction).
-    * None when the directory holds no parquet file.
-    */
-  def dirSchema(spark: SparkSession, dir: Path): Option[StructType] = {
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return None
-    val file = fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && s.getLen > 0)
-      .map(_.getPath)
-      .find { p =>
-        val n = p.getName
-        n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
-      }
-    file.map(footerSchema(spark, _))
+  private def firstDataFile(fs: FileSystem, path: Path): Option[Path] = {
+    val st = fs.getFileStatus(path)
+    if (st.isFile) Some(path).filter(_ => st.getLen > 0)
+    else {
+      val visible = fs.listStatus(path).toSeq
+        .filterNot(s => "_.".contains(s.getPath.getName.head))
+      visible.find(s => s.isFile && s.getLen > 0 &&
+          s.getPath.getName.endsWith(".parquet")).map(_.getPath)
+        .orElse(visible.iterator
+          .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+          .flatMap(s => firstDataFile(fs, s.getPath)).nextOption())
+    }
   }
 }

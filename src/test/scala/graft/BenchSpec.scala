@@ -106,4 +106,17 @@ class BenchSpec extends AnyFunSuite {
     val rr = Map("q103" -> 8.0, "q100" -> 9.0)
     assert(flag(meds, rr).isEmpty)
   }
+
+  test("summary line: 110 queries under 100 s each, b3 and the q80 split " +
+      "fit in SummaryMaxChars on one line") {
+    val medians = (1 to 110).map(i => f"q$i%02d" -> 99.99)
+    val line = Bench.summaryLine(9999.999, contended = true, medians,
+      Some(9999999.0),
+      """"q80_split":{"build_sec":99.999,"night_sec":[99.999,99.999]}""",
+      errors = 110, "/data/testdata/sf0.1")
+    info(s"${line.length} chars")
+    assert(line.length <= Bench.SummaryMaxChars, s"${line.length} chars")
+    assert(line.startsWith("""{"metric":"total","value":9999.999,"""))
+    assert(line.contains(""""q110":99.99}""") && !line.contains("\n"))
+  }
 }

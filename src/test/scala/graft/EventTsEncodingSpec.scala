@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -17,7 +17,7 @@ import graft.streaming.EventStreams
   * downstream query (q33/q64/q70, streaming sessionizer) is
   * encoding-oblivious.
   */
-class EventTsEncodingSpec extends SparkSpec {
+class EventTsEncodingSpec extends SparkSpec with JobCounting {
 
   /** Write the sf0.001 events table under `ts` encoded as: raw int64
     * nanos (what nanosAsLong=true yields for TIMESTAMP(NANOS) files),
@@ -45,6 +45,18 @@ class EventTsEncodingSpec extends SparkSpec {
     }
   }
 
+  test("Tables.apply opens every encoding with no job and the inferred " +
+      "schema") {
+    for ((tag, dir) <- encodedDirs) {
+      var df: DataFrame = null
+      val n = jobs { df = Tables(spark, dir, "events") }
+      assert(n == 0, s"encoding=$tag: opening ran $n jobs")
+      val inferred = spark.read.parquet(s"$dir/events.parquet")
+      assert(df.schema == Tables.normalizeEventTs(inferred).schema,
+        s"encoding=$tag")
+    }
+  }
+
   test("q33 sessionize output is identical under all three encodings") {
     val q33 = SparkEntry.queries("q33_sessionize")
     val results = encodedDirs.map { case (tag, dir) =>
@@ -63,6 +75,18 @@ class EventTsEncodingSpec extends SparkSpec {
         .schema("ts").dataType
       assert(dt == TimestampType, s"encoding=$tag streamed as $dt")
     }
+  }
+
+  test("streaming readEvents: an empty landing dir takes the declared " +
+      "schema; a missing one fails with PATH_NOT_FOUND") {
+    val empty = Files.createTempDirectory("landing-").toString
+    val df = EventStreams.readEvents(spark, empty)
+    assert(df.columns.toSeq == EventStreams.eventSchema.fieldNames.toSeq)
+    assert(df.schema("ts").dataType == TimestampType)
+    val e = intercept[AnalysisException] {
+      EventStreams.readEvents(spark, s"$empty/missing")
+    }
+    assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
   }
 
   test("normalizeEventTs branches cover long, NTZ and timestamp inputs") {

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.TestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.CheckpointBridge
 
@@ -13,30 +9,15 @@ import graft.operators.MergeUpsert
 import graft.sources.VersionedTable
 
 /** Timing-free plan budgets for the catalog-load chain: the number of
-  * Spark jobs two units run on [[InatFixture]], counted by a
-  * SparkListener. A plan change that adds a job, or runs the staged
+  * Spark jobs two units run on [[InatFixture]], counted by
+  * [[JobCounting]]. A plan change that adds a job, or runs the staged
   * batch twice, fails here without a quiet machine. The budgets are the
   * measured job counts; raising one needs a stated reason.
   */
-class LoadJobBudgetSpec extends InatFixture {
+class LoadJobBudgetSpec extends InatFixture with JobCounting {
   import spark.implicits._
 
   private def tmp() = java.nio.file.Files.createTempDirectory("budget").toString
-
-  /** Spark jobs that `f` runs, with every listener event delivered. */
-  private def jobs(f: => Unit): Int = {
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    TestBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { f; TestBus.drain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    n.get
-  }
 
   test("Inat.transform -> write stays within its job budget") {
     val out = tmp()
